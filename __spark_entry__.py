@@ -42,7 +42,12 @@ from enhydris_autoprocess_spark.operators import (
     regularize,
     sessionize,
 )
-from enhydris_autoprocess_spark.rollup import quantile_rollup
+from enhydris_autoprocess_spark.rollup import (
+    ROLE_ALL,
+    quantile_rollup,
+    rollup_series,
+    rollup_tier,
+)
 from enhydris_autoprocess_spark.operators.aggregate import (
     aggregate_step,
     source_end_frame,
@@ -219,83 +224,49 @@ def q_gapfill_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- rollup tiers over events ------------------------------------------------
 
 
-def _bucket(ts, step_us: int):
-    us = F.unix_micros(ts)
-    return F.timestamp_micros(us + (F.lit(step_us) - us % F.lit(step_us)) % F.lit(step_us))
-
-
 def q_rollup_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly tier per (user, event_type) plus the '<all>' row per
+    user (rollup.rollup_series)."""
     ev = _events(spark, sf_dir).select(
-        "user_id", "event_type", _bucket(F.col("ts"), 3600_000_000).alias("ts"), "value"
+        "user_id",
+        # a NULL event_type groups apart from the across-types row but
+        # shares its label, as GROUPING SETS with coalesce over both sets
+        F.coalesce("event_type", F.lit(ROLE_ALL)).alias("event_type"),
+        "ts",
+        "value",
+        F.lit(0).alias("tool"),
     )
-    # Nearly every (user, hour) cell is unique at the driver's
-    # densities, so map-side partial aggregation cannot collapse and
-    # the groupingSets shape shuffles the Expand-doubled rows as
-    # 8-column aggregation states. Instead: one repartition exchange
-    # of the raw 4-column rows keyed by user_id, then each grouping
-    # set as its own aggregation over that exchange — ReuseExchange
-    # shares the shuffle between the two branches, and
-    # hashpartitioning(user_id) satisfies both aggregates' clustered
-    # distributions (user_id is in every grouping set), so no further
-    # exchange appears. Semantically identical to GROUPING SETS
-    # ((user_id, ts), (user_id, event_type, ts)) with
-    # coalesce(event_type, '<all>') applied to both sets.
-    ev = ev.repartition("user_id")
-    aggs = (
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        round6(F.sum("value")).alias("value_sum"),
-        F.min("value").alias("value_min"),
-        F.max("value").alias("value_max"),
+    tier = rollup_series(
+        ev, "1H", key_col="user_id", role_col="event_type",
+        len_col="value", tool_col="tool",
     )
-    fine = (
-        ev.groupBy("user_id", "event_type", "ts")
-        .agg(*aggs)
-        .withColumn("event_type", F.coalesce("event_type", F.lit("<all>")))
-    )
-    alls = (
-        ev.groupBy("user_id", "ts")
-        .agg(*aggs)
-        .select(
-            "user_id",
-            F.lit("<all>").alias("event_type"),
-            "ts",
-            "n_events",
-            "value_sum",
-            "value_min",
-            "value_max",
-        )
-    )
-    return fine.unionByName(alls)
+    return _tier_columns(tier, F.col("role").alias("event_type"))
 
 
 def q_tier_1d_from_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1d tier COMPOSED from the 1h tier (lossless stats) — must equal
     the oracle's direct daily aggregation (tier-by-tier equality)."""
     ev = _events(spark, sf_dir).select(
-        "user_id", _bucket(F.col("ts"), 3600_000_000).alias("ts"), "value"
+        "user_id", F.lit("").alias("role"), "ts", "value", F.lit(0).alias("tool")
     )
-    # Same groups~=rows property as rollup_hourly: one exchange of raw
-    # 3-column rows keyed by user_id replaces two exchanges of
-    # aggregation states ((user,hour) then (user,day)); both tier
-    # aggregations are clustered-distribution-satisfied by user_id.
-    ev = ev.repartition("user_id")
-    t1h = ev.groupBy("user_id", "ts").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("value").alias("value_sum"),
-        F.min("value").alias("value_min"),
-        F.max("value").alias("value_max"),
+    t1h = rollup_series(
+        ev, "1H", key_col="user_id", len_col="value", tool_col="tool"
     )
-    t1d = (
-        t1h.withColumn("ts", _bucket(F.col("ts") - F.expr("INTERVAL 1 MICROSECOND"), 86400_000_000))
-        .groupBy("user_id", "ts")
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            round6(F.sum("value_sum")).alias("value_sum"),
-            F.min("value_min").alias("value_min"),
-            F.max("value_max").alias("value_max"),
-        )
+    t1d = rollup_tier(t1h.where(F.col("role") == ROLE_ALL), "1D")
+    return _tier_columns(t1d)
+
+
+def _tier_columns(tier: DataFrame, *keys) -> DataFrame:
+    """Library tier columns renamed to the events table's names."""
+    return tier.select(
+        F.col("conv_id").alias("user_id"),
+        *keys,
+        "ts",
+        F.col("turn_count").cast("long").alias("n_events"),
+        round6(F.col("text_len_sum")).alias("value_sum"),
+        F.col("text_len_min").alias("value_min"),
+        F.col("text_len_max").alias("value_max"),
     )
-    return t1d
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,12 +447,14 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: exact all-pairs Jaccard >= 0.5 (equal iff banding recall
     is 1 at the gate scale — see section comment).
 
-    est_filter=False: the exact verification below applies the same
-    0.5 threshold the signature-estimate prefilter would, so the
-    prefilter can only drop pairs the exact filter drops too — its
-    broadcast-attach stage (two extra jobs re-scanning the cached
-    signatures) bought nothing. Output is identical: candidates grow
-    to the raw banding set, and the exact filter is unchanged."""
+    est_filter=False: the exact verification below applies the 0.5
+    threshold itself. Without the signature-estimate prefilter the
+    candidates grow to the raw banding set, a superset, and the exact
+    filter is unchanged, so the output can only gain true pairs and
+    moves toward the all-pairs oracle (the estimate is noisy and
+    could drop a pair whose exact Jaccard clears 0.5). It also skips
+    the prefilter's broadcast-attach stage, two extra jobs
+    re-scanning the cached signatures."""
     docs = _documents(spark, sf_dir)
     # persist: the verification stage references the candidate frame
     # twice (semi-join id set + the pair join), and without the cache

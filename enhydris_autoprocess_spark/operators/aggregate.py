@@ -43,7 +43,7 @@ from ..timeutil import MICROS, Step, parse_step
 _METHOD_FN = {"sum": F.sum, "mean": F.avg, "max": F.max, "min": F.min}
 
 
-def _bucket_end_micros(micros: Column, step: Step) -> tuple[Column, Column]:
+def bucket_bounds_micros(micros: Column, step: Step) -> tuple[Column, Column]:
     """(bucket_end, bucket_start) in epoch micros; (start, end] semantics:
     a timestamp exactly on the grid belongs to the bucket it ends."""
     if not step.is_calendar:
@@ -76,7 +76,7 @@ def aggregate_step(
         raise ValueError(f'"{method}" is not a valid method')
 
     micros = ts_micros(F.col(ts_col))
-    b_end, b_start = _bucket_end_micros(micros, target_step)
+    b_end, b_start = bucket_bounds_micros(micros, target_step)
     present = F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col))
     clean = F.when(present, F.col(value_col))
 

@@ -34,10 +34,16 @@ HWM advancement is stage-aware:
 
 Idempotence: re-running with no new source rows appends nothing
 (mirrors "already-complete target yields empty",
-tests/test_models.py:1021-1028). Kill between append and advance =
-one slice reprocessed; tier rows are keyed by (key, ts) so readers
-dedup naturally (at-least-once, like Celery redelivery in the
-reference).
+tests/test_models.py:1021-1028). Delivery is at-least-once: a kill
+between ``TierTable.append`` and the HWM advance leaves the appended
+snapshot in place below an un-advanced HWM, so the next run appends
+that slice again. The killed stage's table then holds the slice
+twice, for good: ``TierTable.read`` does not dedup, so its readers
+see both copies and sums over them double-count. Only the 1H and
+1D stages drop duplicate (conv_id, role, ts) rows from their finer
+input, so a duplicated finer rollup slice does not double-count in the
+coarser tier computed from it; no other stage deduplicates. One commit
+holding the data and its HWM together (ROADMAP C) closes the window.
 
 Skew: aggregations are partial+final (map-side combine absorbs hot
 conv_ids); the per-key serial stages — rocc's window sort and pandas
@@ -92,7 +98,6 @@ class Pipeline:
         compress_tiers: bool = False,
         hot_key_chunking: bool = True,
         hot_chunk_span_seconds: int = 7 * 86400,
-        fused_rollups: bool = False,
     ):
         """``hot_key_chunking`` (default on): the two per-key serial
         stages — the rate-of-change window sort and the pandas
@@ -129,13 +134,6 @@ class Pipeline:
         self.compress_tiers = compress_tiers
         self.hot_key_chunking = hot_key_chunking
         self.hot_chunk_span_seconds = hot_chunk_span_seconds
-        # ``fused_rollups``: compute the coarser rollup tiers from the
-        # in-memory finer slice instead of re-reading the finer tier's
-        # freshly written parquet (see run_rollups). Output-identical
-        # (pinned by tests), so — like hot_key_chunking — the knob is
-        # excluded from the config hash and never invalidates
-        # checkpoints.
-        self.fused_rollups = fused_rollups
 
     def table(self, name: str) -> TierTable:
         if name not in self.tables:
@@ -165,12 +163,9 @@ class Pipeline:
         hwm_key: str,
         t0: float,
         lineage: dict,
-        keep_persisted: bool = False,
     ) -> StageResult:
         """Persist output, append snapshot, advance HWM from hwm_df
-        (columns: hwm_key + ts). ``keep_persisted`` leaves ``out_df``
-        cached for a downstream consumer (fused rollups reuse the
-        finer tier in memory); the caller then owns the unpersist."""
+        (columns: hwm_key + ts)."""
         table = self.table(stage)
         out = out_df.persist()
         # one agg over the persisted frame gives the manifest row count
@@ -209,8 +204,7 @@ class Pipeline:
             seconds=time.time() - t0,
             snapshot_id=snap.snapshot_id if snap else None,
         )
-        if not keep_persisted:
-            out.unpersist()
+        out.unpersist()
         return res
 
     # ------------------------------------------------------------------
@@ -377,33 +371,17 @@ class Pipeline:
         return res
 
     def run_rollups(
-        self,
-        transcripts: DataFrame,
-        finalize: bool = False,
-        fused: bool | None = None,
+        self, transcripts: DataFrame, finalize: bool = False
     ) -> list[StageResult]:
         """Continuous-aggregate tiers 1min -> 1H -> 1D.
 
-        Unless ``finalize``, each tier only emits buckets ending at or
-        before the slice's last complete bucket boundary, so a bucket
-        that may still receive rows stays un-emitted and below the HWM
-        (the rollup analog of trim-last).
-
-        ``fused`` (default: the constructor's ``fused_rollups``,
-        VERDICT r05 #7): the cascade path re-reads each finer
-        TierTable from storage AFTER appending to it — at 10^12-turn
-        scale that's a full re-scan of freshly written parquet per
-        coarse tier per run. The fused path instead keeps the finer
-        slice persisted in memory and unions it with only the finer
-        table's *pre-append* tail above the coarse HWM (the held-back
-        incomplete-bucket rows from earlier runs, read as of the
-        pre-commit snapshot), so one lineage flows scan -> 1min -> 1H
-        -> 1D and storage is written, never re-read, within a run.
-        Tier contents are identical either way (pinned by
-        tests/test_pipeline_storage.py), so the knob is excluded from
-        the config hash."""
-        if fused is None:
-            fused = self.fused_rollups
+        1min comes from the fresh transcript slice; each coarser tier
+        re-reads the finer tier's table above its own HWM, this run's
+        append included (the cascade). Unless ``finalize``, each tier
+        only emits buckets ending at or before the slice's last
+        complete bucket boundary, so a bucket that may still receive
+        rows stays un-emitted and below the HWM (the rollup analog of
+        trim-last)."""
         results = []
 
         # --- 1min: directly from the fresh transcript slice ---------------
@@ -417,14 +395,6 @@ class Pipeline:
         if not finalize and max_ts is not None:
             boundary = (max_ts // step_1min.micros) * step_1min.micros
             t1min = t1min.where(F.unix_micros("ts") <= F.lit(boundary))
-        # pre-append snapshot ids: the fused coarse tiers read the
-        # finer table AS OF these, so this run's own append (already
-        # in memory) is never re-read from disk
-        pre_sids: dict[str, int | None] = {}
-        if fused:
-            snap = self.table("rollup_1min").current_snapshot()
-            pre_sids["rollup_1min"] = snap.snapshot_id if snap else None
-            t1min = t1min.persist()
         results.append(
             self._commit(
                 "rollup_1min",
@@ -433,11 +403,9 @@ class Pipeline:
                 "conv_id",
                 t0,
                 {"source": "transcripts"},
-                keep_persisted=fused,
             )
         )
         fresh.unpersist()
-        prev_new = t1min  # persisted iff fused
 
         # --- coarser tiers: incremental over the FULL finer tier table ----
         # A coarse bucket can span finer rows emitted by earlier runs, so
@@ -449,34 +417,12 @@ class Pipeline:
             t0 = time.time()
             stage = f"rollup_{tier_step}"
             step = parse_step(tier_step)
-            if fused:
-                # pre-append tail (held-back coarse buckets from
-                # earlier runs) + this run's in-memory finer rows —
-                # together exactly what the cascade's post-append read
-                # returns, without re-scanning the fresh parquet
-                tail = (
-                    self.table(source_name).read(
-                        self.spark,
-                        as_of_snapshot=pre_sids[source_name],
-                        min_ts_us=self.ckpt.global_min_hwm(stage),
-                    )
-                    if pre_sids[source_name] is not None
-                    else None
-                )
-                finer = (
-                    prev_new
-                    if tail is None
-                    else tail.unionByName(prev_new)
-                )
-            else:
-                finer = self.table(source_name).read(
-                    self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
-                )
-                if finer is None:
-                    results.append(
-                        StageResult(stage, 0, time.time() - t0, None)
-                    )
-                    continue
+            finer = self.table(source_name).read(
+                self.spark, min_ts_us=self.ckpt.global_min_hwm(stage)
+            )
+            if finer is None:
+                results.append(StageResult(stage, 0, time.time() - t0, None))
+                continue
             finer_fresh = self.ckpt.filter_new(finer, stage, key_col="conv_id")
             finer_fresh = finer_fresh.dropDuplicates(["conv_id", "role", "ts"])
             tier = rollup_tier(finer_fresh, step)
@@ -484,10 +430,6 @@ class Pipeline:
             if not finalize and finer_max is not None:
                 boundary = (finer_max // step.micros) * step.micros
                 tier = tier.where(F.unix_micros("ts") <= F.lit(boundary))
-            if fused:
-                snap = self.table(stage).current_snapshot()
-                pre_sids[stage] = snap.snapshot_id if snap else None
-                tier = tier.persist()
             results.append(
                 self._commit(
                     stage,
@@ -496,14 +438,8 @@ class Pipeline:
                     "conv_id",
                     t0,
                     {"source": source_name},
-                    keep_persisted=fused,
                 )
             )
-            if fused:
-                prev_new.unpersist()
-                prev_new = tier
-        if fused:
-            prev_new.unpersist()
         return results
 
     def run(

@@ -5,8 +5,8 @@ per-role turn counts, tool-call rates, and text-length stats
 Design:
 
 - Tier rows are keyed (conv_id, role, ts) where ``role`` includes the
-  sentinel ``"<all>"`` for the across-roles rollup — produced with
-  GROUPING SETS so the source is scanned once.
+  sentinel ``"<all>"`` for the across-roles rollup. A NULL input role
+  counts under the role ``""``.
 - Buckets are right-labeled left-open intervals, identical to the
   aggregation operator's semantics (operators/aggregate.py), so tier
   timestamps line up with reference-style aggregated series.
@@ -15,11 +15,15 @@ Design:
   from 1h (``rollup_tier``) instead of rescanning the fact table —
   the economic path at 10^12 turns. Rates/means are derived at query
   time (tool_call_rate = tool_calls / turn_count). Tier-by-tier
-  equality with direct computation is pinned by
-  tests/test_rollup.py.
+  equality with direct computation, and with DuckDB on dirty input,
+  is pinned by tests/test_rollup_synth.py.
 
-Scale: each tier is one partial+final hash aggregation; grouping-sets
-doubles the shuffled rows but halves the jobs. No UDFs anywhere.
+Scale: ``rollup_series`` shuffles the projected raw rows once, hash-
+partitioned by key. Every later step groups by a superset of the key,
+so the fine (key, role, ts) aggregate, the ``"<all>"`` re-aggregation
+and any ``rollup_tier`` stacked on top run without another exchange:
+the whole 1min -> 1H -> 1D ladder is one scan and one shuffle (pinned
+by tests/test_plans.py). No UDFs anywhere.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .operators.aggregate import bucket_bounds_micros
 from .schema import ts_micros
 from .timeutil import Step, parse_step
 
@@ -45,9 +50,7 @@ _STATS = (
 
 def bucket_end(ts: Column, step: Step) -> Column:
     """Right-labeled (start, end] bucket end, as in operators.aggregate."""
-    s = F.lit(step.micros)
-    us = ts_micros(ts)
-    return F.timestamp_micros(us + (s - us % s) % s)
+    return F.timestamp_micros(bucket_bounds_micros(ts_micros(ts), step)[0])
 
 
 def rollup_transcripts(df: DataFrame, step: Step | str) -> DataFrame:
@@ -57,7 +60,7 @@ def rollup_transcripts(df: DataFrame, step: Step | str) -> DataFrame:
     return rollup_series(
         df.select(
             F.col("conv_id"),
-            F.coalesce(F.col("role"), F.lit("")).alias("role"),
+            F.col("role"),
             F.col("ts"),
             F.length(F.coalesce(F.col("text"), F.lit("")))
             .cast("double")
@@ -85,26 +88,34 @@ def rollup_series(
     per consumer."""
     if isinstance(step, str):
         step = parse_step(step)
-    base = df.select(
-        F.col(key_col).alias("conv_id"),
-        F.coalesce(F.col(role_col), F.lit("")).alias("role"),
-        bucket_end(F.col(ts_col), step).alias("ts"),
-        F.col(len_col).cast("double").alias("__len"),
-        F.col(tool_col).cast("long").alias("__tool"),
+    fine = (
+        df.select(
+            F.col(key_col).alias("conv_id"),
+            F.coalesce(F.col(role_col), F.lit("")).alias("role"),
+            bucket_end(F.col(ts_col), step).alias("ts"),
+            F.col(len_col).cast("double").alias("__len"),
+            F.col(tool_col).cast("long").alias("__tool"),
+        )
+        .repartition("conv_id")
+        .groupBy("conv_id", "role", "ts")
+        .agg(
+            F.count(F.lit(1)).alias("turn_count"),
+            F.sum("__tool").alias("tool_calls"),
+            F.sum("__len").alias("text_len_sum"),
+            F.min("__len").alias("text_len_min"),
+            F.max("__len").alias("text_len_max"),
+        )
     )
-    grouped = base.groupingSets(
-        [["conv_id", "ts"], ["conv_id", "role", "ts"]],
+    # each fine row feeds its own role and the across-roles row; NULL
+    # stands in for ROLE_ALL until after the final pass, so an input
+    # role spelled "<all>" stays its own group, as under GROUPING SETS
+    both = fine.select(
         "conv_id",
-        "role",
+        F.explode(F.array(F.col("role"), F.lit(None).cast("string"))).alias("role"),
         "ts",
-    ).agg(
-        F.count(F.lit(1)).alias("turn_count"),
-        F.sum("__tool").alias("tool_calls"),
-        F.sum("__len").alias("text_len_sum"),
-        F.min("__len").alias("text_len_min"),
-        F.max("__len").alias("text_len_max"),
+        *_STATS,
     )
-    return grouped.withColumn(
+    return _compose(both).withColumn(
         "role", F.coalesce(F.col("role"), F.lit(ROLE_ALL))
     )
 
@@ -113,16 +124,17 @@ def rollup_tier(tier: DataFrame, step: Step | str) -> DataFrame:
     """Compute a coarser tier FROM a finer tier (lossless composition)."""
     if isinstance(step, str):
         step = parse_step(step)
-    return (
-        tier.withColumn("ts", bucket_end(F.col("ts"), step))
-        .groupBy("conv_id", "role", "ts")
-        .agg(
-            F.sum("turn_count").alias("turn_count"),
-            F.sum("tool_calls").alias("tool_calls"),
-            F.sum("text_len_sum").alias("text_len_sum"),
-            F.min("text_len_min").alias("text_len_min"),
-            F.max("text_len_max").alias("text_len_max"),
-        )
+    return _compose(tier.withColumn("ts", bucket_end(F.col("ts"), step)))
+
+
+def _compose(tier: DataFrame) -> DataFrame:
+    """Re-aggregate partial tier stats per (conv_id, role, ts)."""
+    return tier.groupBy("conv_id", "role", "ts").agg(
+        F.sum("turn_count").alias("turn_count"),
+        F.sum("tool_calls").alias("tool_calls"),
+        F.sum("text_len_sum").alias("text_len_sum"),
+        F.min("text_len_min").alias("text_len_min"),
+        F.max("text_len_max").alias("text_len_max"),
     )
 
 

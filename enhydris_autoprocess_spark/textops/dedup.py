@@ -294,9 +294,13 @@ def minhash_dedup_pairs(
     and skips the signature re-attach stage AND the signature cache —
     for callers that re-verify candidates with an exact measure
     anyway (the driver's minhash_dedup gate does exact
-    shingle-Jaccard at the same threshold, so the estimate filter
-    could only remove pairs the exact filter would remove too, and
-    its two broadcast-attach jobs were pure overhead)."""
+    shingle-Jaccard at the same threshold). The candidates then grow
+    to a superset of the filtered ones and the exact filter is
+    unchanged, so the verified output can only gain pairs, each a
+    true match, and moves toward the all-pairs result. The estimate
+    is a different, noisy measure: with the filter on, a pair whose
+    exact Jaccard clears the threshold can be dropped because its
+    estimate falls short."""
     # widen the scan BEFORE the signature kernel: the driver's corpus
     # is a single-row-group parquet file, which would serialize the
     # Arrow kernel on one core (guide §2.5 "input skew"; measured

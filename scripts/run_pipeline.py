@@ -27,7 +27,6 @@ the reference's admin forms; validation rules identical —
                          "accuracy": 10000}],
   "channel": "text_len",
   "gap_fill": {"enabled": true, "max_gap_slots": 60, "use_sql": false},
-  "fused_rollups": false,
   "compress_tiers": false,
   "retention": {"checked": 604800, "rollup_1min": 2592000,
                  "rollup_1H": 31536000, "rollup_1D": null}
@@ -154,7 +153,6 @@ def main(argv=None) -> int:
         gap_fill_enabled=bool(gf.get("enabled", True)),
         max_gap_slots=gf.get("max_gap_slots", 60),
         use_sql_gapfill=bool(gf.get("use_sql", False)),
-        fused_rollups=bool(raw.get("fused_rollups", False)),
         compress_tiers=bool(raw.get("compress_tiers", False)),
     )
     results = pipe.run(transcripts, finalize=args.finalize)

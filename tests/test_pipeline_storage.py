@@ -803,47 +803,29 @@ def test_pipeline_quantile_tier_incremental_equals_oneshot(
     assert a and a == b, f"{len(a)} vs {len(b)}; diff={list(a ^ b)[:4]}"
 
 
-def test_fused_rollups_equal_cascade(spark, transcripts, tmp_path):
-    """VERDICT r05 #7: fused_rollups computes 1H/1D from the in-memory
-    finer slice + the finer table's pre-append tail instead of
-    re-reading freshly written parquet. Tier contents must be
-    identical to the cascade across incremental runs with a
-    mid-bucket cut, the knob must not invalidate checkpoints
-    (cross-mode resume), and a fused rerun must stay idempotent."""
+def test_rollup_cascade_mid_bucket_cut_equals_oneshot(spark, transcripts, tmp_path):
+    """The 1H/1D cascade re-reads the finer tier above its own HWM, so
+    a batch cut inside an hour and a day bucket must leave all three
+    rollup tiers equal to a one-shot finalized run, and a rerun with
+    nothing new must append nothing."""
     cut = dt.datetime(2024, 1, 2, 0, 30)  # mid-H, mid-D bucket
     first = transcripts.where(F.col("ts") < F.lit(cut))
 
-    root_a = str(tmp_path / "cascade")
-    pa = Pipeline(spark, root_a, CFG, gap_fill_enabled=False)
-    pa.run_rollups(first, finalize=False)
-    pa.run_rollups(transcripts, finalize=True)
+    root_a = str(tmp_path / "oneshot")
+    Pipeline(spark, root_a, CFG, gap_fill_enabled=False).run_rollups(
+        transcripts, finalize=True
+    )
 
-    root_b = str(tmp_path / "fused")
-    pb = Pipeline(spark, root_b, CFG, gap_fill_enabled=False, fused_rollups=True)
-    r1 = pb.run_rollups(first, finalize=False)
+    root_b = str(tmp_path / "cascade")
+    pb = Pipeline(spark, root_b, CFG, gap_fill_enabled=False)
+    pb.run_rollups(first, finalize=False)
     r2 = pb.run_rollups(transcripts, finalize=True)
     assert all(r.rows_out > 0 for r in r2), [(r.stage, r.rows_out) for r in r2]
 
     for stage in ("rollup_1min", "rollup_1H", "rollup_1D"):
         a = _tier_canon(spark, root_a, stage)
         b = _tier_canon(spark, root_b, stage)
-        assert a == b, f"{stage}: {len(a)} vs {len(b)}; diff={list(a ^ b)[:4]}"
+        assert a and a == b, f"{stage}: {len(a)} vs {len(b)}; diff={list(a ^ b)[:4]}"
 
-    # fused rerun with nothing new appends nothing
     r3 = pb.run_rollups(transcripts, finalize=True)
     assert all(r.rows_out == 0 for r in r3), [(r.stage, r.rows_out) for r in r3]
-
-    # cross-mode resume: cascade batch 1, fused batch 2 on the same
-    # root — the knob is excluded from the config hash, so checkpoints
-    # survive and the result still matches
-    root_c = str(tmp_path / "crossmode")
-    Pipeline(spark, root_c, CFG, gap_fill_enabled=False).run_rollups(
-        first, finalize=False
-    )
-    Pipeline(
-        spark, root_c, CFG, gap_fill_enabled=False, fused_rollups=True
-    ).run_rollups(transcripts, finalize=True)
-    for stage in ("rollup_1min", "rollup_1H", "rollup_1D"):
-        assert _tier_canon(spark, root_c, stage) == _tier_canon(
-            spark, root_a, stage
-        ), stage

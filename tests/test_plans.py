@@ -112,16 +112,23 @@ def test_parquet_filter_pushdown_reaches_scan(spark, tmp_path):
 
 
 def test_rollup_tiers_single_raw_row_exchange(spark, tmp_path):
-    """Round-7 reshape: the hourly/daily tier queries repartition the
-    raw events by user_id once instead of shuffling Expand-doubled
-    aggregation states (rollup_hourly) or shuffling twice
-    (tier_1d_from_1h). The union-of-aggs form must stay row-identical
-    to GROUPING SETS ((user_id, ts), (user_id, event_type, ts)) with
-    both sets' event_type coalesced, and the daily tier's plan must
-    hold a single exchange of the raw rows."""
+    """The tier ladder (rollup.rollup_series, then rollup_tier on top)
+    repartitions the raw rows by key once: the hourly and daily tier
+    queries and every tier of build_tiers, over parquet and over a
+    persisted frame, show one source scan and one Exchange, and no
+    Expand. rollup_hourly must stay row-identical to GROUPING SETS
+    ((user_id, ts), (user_id, event_type, ts)) with both sets'
+    event_type coalesced."""
     import random
 
     import __spark_entry__ as e
+    from enhydris_autoprocess_spark.rollup import bucket_end, build_tiers
+
+    def assert_one_scan_one_exchange(df, scan="FileScan parquet"):
+        p = _plan(df)
+        assert p.count(scan) == 1, p
+        assert p.count("Exchange") == 1, p
+        assert "Expand" not in p, p
 
     rng = random.Random(7)
     t0 = dt.datetime(2024, 3, 1)
@@ -144,7 +151,7 @@ def test_rollup_tiers_single_raw_row_exchange(spark, tmp_path):
     ev = spark.read.parquet(path + "/events.parquet").select(
         "user_id",
         "event_type",
-        e._bucket(F.col("ts"), 3600_000_000).alias("ts"),
+        bucket_end(F.col("ts"), parse_step("1H")).alias("ts"),
         "value",
     )
     ref = (
@@ -166,6 +173,20 @@ def test_rollup_tiers_single_raw_row_exchange(spark, tmp_path):
     key = lambda r: tuple(str(v) for v in r)
     assert sorted(got.collect(), key=key) == sorted(ref.collect(), key=key)
 
-    p = _plan(e.q_tier_1d_from_1h(spark, path))
-    assert p.count("Exchange") == 1
-    assert "Expand" not in p
+    assert_one_scan_one_exchange(e.q_rollup_hourly(spark, path))
+    assert_one_scan_one_exchange(e.q_tier_1d_from_1h(spark, path))
+
+    turns = str(tmp_path / "turns")
+    spark.createDataFrame(
+        [
+            (f"c{u}", et, "x" * int(v % 50), et, ts)
+            for u, et, ts, v in rows
+        ],
+        "conv_id string, role string, text string, tool string, ts timestamp",
+    ).write.parquet(turns)
+    for tier in build_tiers(spark.read.parquet(turns)).values():
+        assert_one_scan_one_exchange(tier)
+    cached = spark.read.parquet(turns).persist()
+    for tier in build_tiers(cached).values():
+        assert_one_scan_one_exchange(tier, scan="InMemoryTableScan")
+    cached.unpersist()

@@ -41,6 +41,73 @@ def test_tier_composition_equals_direct(spark, transcripts):
     assert _canon(tiers["1D"]) == _canon(direct_1d)
 
 
+_DUCK_TIER = """
+    WITH b AS (
+      SELECT conv_id, coalesce(role, '') AS role,
+        make_timestamp(epoch_us(ts) + ({s} - epoch_us(ts) % {s}) % {s}) AS ts,
+        CAST(length(coalesce(text, '')) AS DOUBLE) AS len,
+        CAST(tool IS NOT NULL AS BIGINT) AS tool
+      FROM t)
+    SELECT conv_id, coalesce(role, '{all}') AS role, ts, count(*) AS turn_count,
+      sum(tool) AS tool_calls, sum(len) AS text_len_sum,
+      min(len) AS text_len_min, max(len) AS text_len_max
+    FROM b GROUP BY GROUPING SETS ((conv_id, ts), (conv_id, role, ts))
+"""
+
+
+def test_dirty_input_tiers_match_duckdb(spark):
+    """Every tier, direct and composed, against DuckDB over the same
+    rows: NULL role/text/tool, duplicate (conv_id, ts) rows, turns
+    exactly on minute/hour/day boundaries, and an empty frame."""
+    import datetime as dt
+
+    import duckdb
+
+    t0 = dt.datetime(2024, 3, 1)
+    rows = [
+        ("c1", "user", "hello", None, t0),  # on every boundary
+        ("c1", None, "hi", "search", t0),  # NULL role, duplicate ts
+        ("c1", "user", None, None, t0),  # NULL text, duplicate ts
+        ("c1", "assistant", "abc", "calc", t0 + dt.timedelta(seconds=1)),
+        ("c1", None, None, None, t0 + dt.timedelta(minutes=1)),
+        ("c1", "user", "x" * 40, None, t0 + dt.timedelta(hours=1)),
+        ("c1", "user", "tail", None, t0 + dt.timedelta(hours=1, microseconds=1)),
+        ("c1", "tool", "", "search", t0 + dt.timedelta(days=1)),
+        ("c2", None, "only null roles", None, t0 + dt.timedelta(minutes=59, seconds=59)),
+        ("c2", None, "only null roles", None, t0 + dt.timedelta(minutes=59, seconds=59)),
+        ("c2", "", "empty role", "x", t0 + dt.timedelta(hours=23, minutes=30)),
+        ("c3", "assistant", None, "calc", t0 + dt.timedelta(days=2, microseconds=-1)),
+    ]
+    schema = "conv_id string, role string, text string, tool string, ts timestamp"
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE t (conv_id VARCHAR, role VARCHAR, text VARCHAR, "
+        "tool VARCHAR, ts TIMESTAMP)"
+    )
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?)", rows)
+    micros = {"1min": 60_000_000, "1H": 3_600_000_000, "1D": 86_400_000_000}
+
+    def expected(step):
+        return set(
+            con.execute(_DUCK_TIER.format(s=micros[step], all=ROLE_ALL)).fetchall()
+        )
+
+    def got(df):
+        return {tuple(r) for r in df.collect()}
+
+    df = spark.createDataFrame(rows, schema)
+    tiers = build_tiers(df)
+    for step in micros:
+        want = expected(step)
+        assert want
+        assert got(rollup_transcripts(df, step)) == want, step
+        assert got(tiers[step]) == want, step
+
+    empty = spark.createDataFrame([], schema)
+    assert not got(rollup_transcripts(empty, "1min"))
+    assert all(not got(t) for t in build_tiers(empty).values())
+
+
 def test_role_all_is_sum_of_roles(spark, transcripts):
     t = rollup_transcripts(transcripts, "1D")
     per_role = (

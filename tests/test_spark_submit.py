@@ -42,12 +42,11 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
         "aggregations": [
             {"target_time_step": "H", "method": "sum", "max_missing": 100}
         ],
-        # the round-6 declarative surface: quantile tier + fused
-        # rollup mode straight from job JSON
+        # the round-6 declarative surface: a quantile tier straight
+        # from job JSON
         "quantile_rollups": [
             {"target_time_step": "1D", "quantiles": [0.5, 0.9]}
         ],
-        "fused_rollups": True,
         "gap_fill": {"enabled": False},
         "retention": {"rollup_1min": 86400},
     }

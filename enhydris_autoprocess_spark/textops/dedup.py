@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..cache import carry_caches
@@ -255,6 +256,44 @@ def _popcount64(x: np.ndarray) -> np.ndarray:
         x = (x & _POP_M2) + ((x >> two) & _POP_M2)
         x = (x + (x >> four)) & _POP_M4
         return (x * _POP_H01) >> s56
+
+
+def _bucket_runs(pdf: pd.DataFrame, *key_cols: str):
+    """Sort a partition's rows by the bucket key columns (``id``
+    ascending, stable, inside a bucket) and find the runs of equal keys.
+    Returns ``(order, starts)``: the sorting permutation and the first
+    sorted position of every run."""
+    keys = [pdf[c].to_numpy() for c in key_cols]
+    order = np.argsort(pdf["id"].to_numpy(), kind="stable")
+    order = order[np.lexsort([k[order] for k in reversed(keys)])]
+    brk = np.zeros(len(order), dtype=bool)
+    brk[:1] = True
+    for k in keys:
+        sk = k[order]
+        brk[1:] |= sk[1:] != sk[:-1]
+    return order, np.flatnonzero(brk)
+
+
+def _run_pairs(starts: np.ndarray, n: int, max_pairs: int = 4_000_000):
+    """Every in-run pair ``(left, right)`` of sorted positions, left <
+    right, for runs beginning at ``starts`` over ``n`` rows. Yields in
+    passes of at most ``max_pairs`` pairs (a single row's pairs are
+    never split), so one huge bucket never materializes at once."""
+    lens = np.diff(np.r_[starts, n])
+    # later rows in the same run, per row; singletons count 0
+    cnt = np.repeat(starts + lens, lens) - np.arange(n) - 1
+    csum = np.cumsum(cnt)
+    lo = 0
+    while lo < n:
+        done = int(csum[lo - 1]) if lo else 0
+        hi = max(int(np.searchsorted(csum, done + max_pairs, "right")), lo + 1)
+        c = cnt[lo:hi]
+        total = int(csum[hi - 1]) - done
+        if total:
+            left = np.repeat(np.arange(lo, hi), c)
+            right = left + 1 + np.arange(total) - np.repeat(np.cumsum(c) - c, c)
+            yield left, right
+        lo = hi
 
 
 class _SplitMix:
@@ -544,6 +583,17 @@ def simhash_dedup_pairs(
     single consumer — the per-bucket pair kernel — so nothing needs
     persisting or releasing.)
     """
+    if not 0 <= max_hamming <= 15:
+        # 16 blocks over 64 bits is the widest split where pigeonhole
+        # completeness still holds for max_hamming + 1 blocks; beyond
+        # that the blocking would silently miss qualifying pairs, and a
+        # negative radius leaves no block at all.
+        raise ValueError(
+            f"max_hamming={max_hamming} is outside 0..15: pigeonhole "
+            "blocking over 64-bit fingerprints needs 1 <= max_hamming + 1 "
+            "<= 16 blocks"
+        )
+
     # repartition before the fingerprint kernel: the driver's corpus is
     # one unsplittable row group, which would serialize the Arrow
     # kernel on a single core (guide §2.5)
@@ -551,16 +601,6 @@ def simhash_dedup_pairs(
         F.col(id_col).alias("id"),
         _simhash_fp_fast(F.col(text_col), shingle_k).alias("fp"),
     )
-
-    if max_hamming > 15:
-        # 16 blocks over 64 bits is the widest split where pigeonhole
-        # completeness still holds for max_hamming + 1 blocks; beyond
-        # that the blocking would silently miss qualifying pairs.
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds 15, the largest radius "
-            "for which pigeonhole blocking over 64-bit fingerprints is "
-            "complete (needs max_hamming + 1 <= 16 blocks)"
-        )
     n_blocks = max_hamming + 1
     base_w, extra = divmod(64, n_blocks)
     widths = [base_w + (1 if i < extra else 0) for i in range(n_blocks)]
@@ -585,12 +625,10 @@ def simhash_dedup_pairs(
     # previous release ran (guide §2.3/§8: the join materialized every
     # colliding pair as a JVM row BEFORE the hamming filter — 110M rows
     # at 50k docs under the production radius, 26s — where the same
-    # g x g XOR/popcount per bucket is a few hundred M vectorized ops,
-    # and only the pairs INSIDE the radius ever become rows). Output is
+    # in-bucket XOR/popcount is a few hundred M vectorized ops, and
+    # only the pairs INSIDE the radius ever become rows). Output is
     # identical: same (id_a < id_b, hamming <= max_hamming) pairs, same
     # popcount, dedup across blocks unchanged.
-    from pyspark.sql import types as T
-
     id_type = df.schema[id_col].dataType
     schema = T.StructType(
         [
@@ -599,66 +637,34 @@ def simhash_dedup_pairs(
             T.StructField("hamming", T.IntegerType(), True),
         ]
     )
-    radius = max_hamming
-
-    def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        empty = {"id_a": [], "id_b": [], "hamming": np.array([], np.int32)}
-        if n < 2:
-            return pd.DataFrame(empty)
-        ids = pdf["id"].to_numpy()
-        fp = pdf["fp"].to_numpy(dtype=np.int64).view(np.uint64)
-        order = np.argsort(ids, kind="stable")
-        ids, fp = ids[order], fp[order]
-        out_a, out_b, out_h = [], [], []
-        # row-block the g x g XOR matrix to a few MB per pass
-        ch = max(1, 4_000_000 // n)
-        for i0 in range(0, n - 1, ch):
-            i1 = min(i0 + ch, n)
-            h = _popcount64(fp[i0:i1, None] ^ fp[None, :])
-            ii, jj = np.nonzero(h <= radius)
-            gi = ii + i0
-            keep = jj > gi
-            if keep.any():
-                gi, jj = gi[keep], jj[keep]
-                ia, ib = ids[gi], ids[jj]
-                ne = ia != ib  # duplicate ids never self-pair (a.id < b.id)
-                out_a.append(ia[ne])
-                out_b.append(ib[ne])
-                out_h.append(h[ii[keep], jj][ne].astype(np.int32))
-        if not out_a:
-            return pd.DataFrame(empty)
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "hamming": np.concatenate(out_h),
-            }
-        )
-
     # repartition-by-key + mapInPandas instead of
     # groupBy().applyInPandas: the grouped-map path ships ONE Arrow
-    # batch and one Python invocation PER GROUP (~1.3k tiny buckets
-    # here — measured ~3s of pure per-group overhead at sf0.1, guide
-    # §4.1 "how many columns/batches cross"); hash-partitioning by the
-    # key keeps every bucket whole inside one partition, and one
-    # Python call then sweeps all of a partition's buckets.
+    # batch and one Python invocation PER GROUP (35k buckets at 10k
+    # docs under radius 3, ~88% of them singletons, guide §4.1 "how
+    # many columns/batches cross"); hash-partitioning by the key keeps
+    # every bucket whole inside one partition, and one Python call
+    # sorts the partition by bucket and sweeps every in-bucket pair in
+    # vectorized passes (no per-bucket frame).
     def emit_partition(batches):
         chunks = [p for p in batches if len(p)]
         if not chunks:
             return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        outs = []
-        for _, g in pdf.groupby(["block", "chunk"], sort=False):
-            r = emit_pairs(g)
-            if len(r):
-                outs.append(r)
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+        pdf = pd.concat(chunks, ignore_index=True)
+        order, starts = _bucket_runs(pdf, "block", "chunk")
+        ids = pdf["id"].to_numpy()[order]
+        fp = pdf["fp"].to_numpy(dtype=np.int64).view(np.uint64)[order]
+        for a, b in _run_pairs(starts, len(ids)):
+            h = _popcount64(fp[a] ^ fp[b])
+            # duplicate ids never self-pair (a.id < b.id)
+            keep = (h <= max_hamming) & (ids[a] != ids[b])
+            if keep.any():
+                yield pd.DataFrame(
+                    {
+                        "id_a": ids[a[keep]],
+                        "id_b": ids[b[keep]],
+                        "hamming": h[keep].astype(np.int32),
+                    }
+                )
 
     return (
         banded.repartition(F.col("block"), F.col("chunk"))

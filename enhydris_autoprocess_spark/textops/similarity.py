@@ -20,6 +20,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from .dedup import _bucket_runs, _min_scan_partitions
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -184,8 +186,6 @@ def _scored_against_queries(
                         "score": np.concatenate(out_s),
                     }
                 )
-
-    from .dedup import _min_scan_partitions
 
     src = _min_scan_partitions(
         corpus.select(F.col(id_col), F.col(vec_col))
@@ -532,53 +532,53 @@ def embedding_near_dup_pairs(
         prefilter = threshold - (2e-6 if round_digits is not None else 1e-6)
         vdim = dim
 
-        def emit_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            empty = {
-                "id_a": [],
-                "id_b": [],
-                "cosine": np.array([], np.float64),
-            }
-            if len(pdf) < 2:
-                return pd.DataFrame(empty)
-            ids_all = pdf["id"].to_numpy()
+        # repartition-by-key + mapInPandas instead of
+        # groupBy().applyInPandas: the grouped-map path pays one Arrow
+        # batch + Python call per (band, bucket) group (up to bands *
+        # 2^bits_per_band: 2,047 dense buckets of up to 224 members at
+        # 10k 64-dim vectors); partitioning by the key keeps buckets
+        # whole and one Python call sorts a partition by bucket and runs
+        # the Gram over each bucket of 2+ members (guide §4.1).
+        def emit_partition(batches):
+            chunks = [p for p in batches if len(p)]
+            if not chunks:
+                return
+            pdf = pd.concat(chunks, ignore_index=True)
             vals = pdf["v"].to_numpy(dtype=object)
-            rows = [
-                np.asarray(x, dtype=np.float64)
-                if x is not None and len(x) == vdim
-                else None
-                for x in vals
-            ]
-            ok = np.array([r is not None for r in rows])
+            ok = np.array([x is not None and len(x) == vdim for x in vals])
             if ok.sum() < 2:
-                return pd.DataFrame(empty)
-            ids = ids_all[ok]
-            V = np.stack([r for r in rows if r is not None])
-            order = np.argsort(ids, kind="stable")
-            ids, V = ids[order], V[order]
-            n = len(ids)
+                return
+            pdf, vals = pdf[ok], vals[ok]
+            order, starts = _bucket_runs(pdf, "band", "bucket")
+            ids = pdf["id"].to_numpy()[order]
+            V = np.stack([np.asarray(x, dtype=np.float64) for x in vals[order]])
+            ends = np.r_[starts[1:], len(ids)]
+            multi = ends - starts >= 2
+            out_i, out_j = [], []
             with np.errstate(divide="ignore", invalid="ignore"):
                 inv = 1.0 / np.sqrt(np.einsum("ij,ij->i", V, V))
                 Vn = V * inv[:, None]
-                out_i, out_j = [], []
-                # row-block the n x n Gram matrix to a few MB per pass
-                ch = max(1, 4_000_000 // n)
-                for i0 in range(0, n - 1, ch):
-                    i1 = min(i0 + ch, n)
-                    G = Vn[i0:i1] @ Vn.T
-                    ii, jj = np.nonzero(G >= prefilter)
-                    gi = ii + i0
-                    keep = jj > gi
-                    if keep.any():
-                        out_i.append(gi[keep])
-                        out_j.append(jj[keep])
+                for s0, s1 in zip(starts[multi], ends[multi]):
+                    W = Vn[s0:s1]
+                    n = s1 - s0
+                    # row-block the n x n Gram matrix to a few MB per pass
+                    ch = max(1, 4_000_000 // n)
+                    for i0 in range(0, n - 1, ch):
+                        G = W[i0 : i0 + ch] @ W.T
+                        ii, jj = np.nonzero(G >= prefilter)
+                        gi = ii + i0
+                        keep = jj > gi
+                        if keep.any():
+                            out_i.append(gi[keep] + s0)
+                            out_j.append(jj[keep] + s0)
             if not out_i:
-                return pd.DataFrame(empty)
+                return
             gi = np.concatenate(out_i)
             jj = np.concatenate(out_j)
             ne = ids[gi] != ids[jj]  # duplicate ids never self-pair
             gi, jj = gi[ne], jj[ne]
             if len(gi) == 0:
-                return pd.DataFrame(empty)
+                return
             # exact re-score: the same einsum ops as cosine_fast, so
             # emitted values are bit-identical to the old scorer's
             A, B = V[gi], V[jj]
@@ -586,32 +586,9 @@ def embedding_near_dup_pairs(
             den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
                 np.einsum("ij,ij->i", B, B)
             )
-            return pd.DataFrame(
+            yield pd.DataFrame(
                 {"id_a": ids[gi], "id_b": ids[jj], "cosine": num / den}
             )
-
-        # repartition-by-key + mapInPandas instead of
-        # groupBy().applyInPandas: the grouped-map path pays one Arrow
-        # batch + Python call per (band, bucket) group (bands *
-        # 2^bits_per_band of them); partitioning by the key keeps
-        # buckets whole and one Python call sweeps a partition's
-        # buckets (guide §4.1).
-        def emit_partition(batches):
-            chunks = [p for p in batches if len(p)]
-            if not chunks:
-                return
-            pdf = (
-                pd.concat(chunks, ignore_index=True)
-                if len(chunks) > 1
-                else chunks[0]
-            )
-            outs = []
-            for _, g in pdf.groupby(["band", "bucket"], sort=False):
-                r = emit_pairs(g)
-                if len(r):
-                    outs.append(r)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
 
         scored = (
             sig.repartition(F.col("band"), F.col("bucket"))

@@ -190,3 +190,31 @@ def test_rollup_tiers_single_raw_row_exchange(spark, tmp_path):
     for tier in build_tiers(cached).values():
         assert_one_scan_one_exchange(tier, scan="InMemoryTableScan")
     cached.unpersist()
+
+
+def test_textops_pair_kernels_one_map_in_pandas_no_join(spark):
+    """SimHash, embedding-LSH near-dup and LSH top-k each find their
+    pairs inside ONE mapInPandas kernel: no self-join or broadcast join
+    of candidate rows, and no second Python pass."""
+    from enhydris_autoprocess_spark.textops import (
+        embedding_near_dup_pairs,
+        lsh_cosine_topk,
+        simhash_dedup_pairs,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i} about spark shuffles") for i in range(8)],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i)]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    for out in (
+        simhash_dedup_pairs(docs),
+        embedding_near_dup_pairs(vecs, dim=3, method="lsh"),
+        lsh_cosine_topk(vecs, vecs.limit(2), k=3, dim=3),
+    ):
+        p = _plan(out)
+        assert "Join" not in p, p
+        assert p.count("MapInPandas") == 1, p

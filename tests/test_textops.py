@@ -72,12 +72,109 @@ def test_simhash_pairs(spark, docs):
 
 def test_simhash_rejects_radius_beyond_pigeonhole_limit(spark, docs):
     """ADVICE r03: n_blocks silently capped at 16, so the 'complete for
-    ANY radius' claim lapsed at max_hamming >= 16; now it's a loud error."""
+    ANY radius' claim lapsed at max_hamming >= 16; now it's a loud error.
+    A negative radius leaves no block (ZeroDivisionError at -1, an
+    opaque AnalysisException below), so it is rejected the same way."""
     import pytest as _pytest
 
     simhash_dedup_pairs(docs, max_hamming=15).schema  # boundary still ok
-    with _pytest.raises(ValueError, match="max_hamming"):
-        simhash_dedup_pairs(docs, max_hamming=16)
+    simhash_dedup_pairs(docs, max_hamming=0).schema
+    for bad in (16, -1, -2):
+        with _pytest.raises(ValueError, match="max_hamming"):
+            simhash_dedup_pairs(docs, max_hamming=bad)
+
+
+def _simhash_corpus(seed=11):
+    """~300 docs: random shared-vocabulary texts, near-copies with one
+    to three word substitutions, exact copies, duplicate doc_ids (same
+    and different text), NULL and empty texts."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    vocab = [f"w{i}" for i in range(150)]
+
+    def text(n):
+        return " ".join(rng.choice(vocab, n))
+
+    rows = [(i, text(rng.randint(3, 40))) for i in range(220)]
+    for i in range(220, 280):
+        words = rows[rng.randint(0, 220)][1].split()
+        for _ in range(rng.randint(0, 4)):
+            words[rng.randint(len(words))] = rng.choice(vocab)
+        rows.append((i, " ".join(words)))
+    rows += [(5, rows[5][1]), (7, text(30)), (230, rows[3][1]), (231, None)]
+    rows += [(i, None) for i in range(280, 285)]
+    rows += [(285, ""), (286, "   "), (287, "")]
+    return rows
+
+
+def test_simhash_pairs_match_numpy_all_pairs(spark):
+    """Banding plus the in-bucket sweep is exact: at radius 3, 8 and 15
+    the pairs equal an all-pairs popcount over the same fingerprints,
+    with each pair's hamming one of its row pairs' distances (duplicate
+    doc_ids carry several fingerprints), no self-pairs and no repeats."""
+    import numpy as np
+
+    from enhydris_autoprocess_spark.textops.dedup import _simhash_fp_fast
+
+    df = spark.createDataFrame(_simhash_corpus(), "doc_id long, text string")
+    fps = df.select("doc_id", _simhash_fp_fast(F.col("text"), 2)).collect()
+    ids = np.array([r[0] for r in fps])
+    fp = np.array([r[1] for r in fps], dtype=np.int64).view(np.uint8)
+    bits = np.unpackbits(fp.reshape(len(ids), 8), axis=1).astype(bool)
+    ham = (bits[:, None, :] != bits[None, :, :]).sum(axis=2)
+    sizes = []
+    for radius in (3, 8, 15):
+        ref = {}
+        for i, j in zip(*np.nonzero(ham <= radius)):
+            if ids[i] < ids[j]:
+                ref.setdefault((ids[i], ids[j]), set()).add(ham[i, j])
+        got = simhash_dedup_pairs(df, max_hamming=radius).collect()
+        pairs = [(r.id_a, r.id_b) for r in got]
+        assert len(pairs) == len(set(pairs))
+        assert set(pairs) == set(ref)
+        assert all(r.hamming in ref[(r.id_a, r.id_b)] for r in got)
+        sizes.append(len(ref))
+    assert 0 < sizes[0] < sizes[1] < sizes[2]
+
+
+def test_bucket_run_pairs_match_combinations():
+    """The sweep helper yields exactly itertools.combinations inside
+    every run, runs of one row yield nothing, and a run with more pairs
+    than the pass bound is split over several passes."""
+    import itertools
+
+    import numpy as np
+    import pandas as pd
+
+    from enhydris_autoprocess_spark.textops.dedup import _bucket_runs, _run_pairs
+
+    rng = np.random.RandomState(2)
+    lens = np.r_[rng.randint(1, 9, 40), np.ones(20, int), 120]
+    rng.shuffle(lens)
+    starts = np.r_[0, np.cumsum(lens)[:-1]]
+    n = int(lens.sum())
+    want = [
+        p for s, m in zip(starts, lens) for p in itertools.combinations(range(s, s + m), 2)
+    ]
+    for bound in (1_000, 4_000_000):
+        passes = list(_run_pairs(starts, n, max_pairs=bound))
+        got = [(int(a), int(b)) for left, right in passes for a, b in zip(left, right)]
+        assert got == want
+        assert all(len(left) <= bound for left, _ in passes)
+        assert (len(passes) > 1) == (bound < len(want))
+    assert list(_run_pairs(np.arange(5), 5)) == []
+
+    keys = rng.randint(0, 6, (2, 300))
+    pdf = pd.DataFrame({"id": rng.randint(0, 50, 300), "b": keys[0], "c": keys[1]})
+    order, starts = _bucket_runs(pdf, "b", "c")
+    srt = pdf.iloc[order]
+    runs = np.split(np.arange(300), starts[1:])
+    assert len(runs) == len(pdf.groupby(["b", "c"]))
+    for run in runs:
+        part = srt.iloc[run]
+        assert part[["b", "c"]].nunique().max() == 1
+        assert part["id"].is_monotonic_increasing
 
 
 def test_ngram_jaccard(spark, docs):
